@@ -17,6 +17,9 @@ import org.apache.spark.sql.SparkSession
   * - inputPath: parquet table of (doc_id string, spans array<struct<
   *   kind,text,media_ref,offset>>) — the BASELINE.json input_hint shape.
   * - outPath/metricsPath: the lineage tables (Lineage.runResumable).
+  *   Extraction runs as one Catalyst projection through the
+  *   `extract_spans` expression for the chosen strategy; each doc's
+  *   `wall_ms` is its time inside that expression.
   * - runId: unique per attempt (default: wall-clock stamp). Reusing an
   *   id fails fast.
   * - strategy: e1 | e2 | e2mid (default e1, the reference's live path).

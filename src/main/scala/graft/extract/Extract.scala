@@ -69,6 +69,11 @@ object Extract {
     out.result()
   }
 
+  /** Status of a document whose `spans` is null: nothing to extract or
+    * pass through, so it yields no spans and is not "ok".
+    */
+  val NullSpansStatus = "error:null_spans"
+
   /** Total function: a document that trips an unexpected per-doc error
     * (e.g. a comparator-contract violation from adversarial geometry in
     * the E2 path) passes through unchanged with status "error:<class>"
@@ -76,7 +81,8 @@ object Extract {
     * must not kill the run; the lineage table records it.
     */
   def extractDoc(doc: Doc, strategy: Strategy = Strategy.RegionClustering): ExtractedDoc =
-    try extractDocUnsafe(doc, strategy)
+    if (doc.spans == null) ExtractedDoc(doc.doc_id, Vector.empty, 0, 0, NullSpansStatus)
+    else try extractDocUnsafe(doc, strategy)
     catch {
       case scala.util.control.NonFatal(e) =>
         // null-safe, offset-sorted, renumbered — identical shape to the

@@ -1,11 +1,13 @@
 package graft.lineage
 
-import graft.{Doc, ExtractedDoc}
+import graft.Doc
 import graft.extract.Extract
+import graft.functions.ExtractSpansTimedExpr
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.sql.types._
 
 /** Checkpoint / lineage / resume (SURVEY.md S9 + K6 — the Spark-native
   * replacement for the reference's DynamoDB result cache,
@@ -19,6 +21,10 @@ import org.apache.spark.sql.functions._
   *    `partition_id` and `wall_ms` lineage columns, partitioned by run_id
   *    so metrics derivation is a directory-pruned read-back (no cache of
   *    the full output in memory, which would not survive 100 TB).
+  *    Extraction is one Catalyst projection through the `extract_spans`
+  *    expression (`extractWithLineage`); `wall_ms` is the doc's
+  *    extraction time inside that expression, not its scan, shuffle or
+  *    write.
   *  - metrics table `<metricsPath>` — one row per document:
   *    (run_id, partition_id, doc_id, status, n_tables, n_cells, checksum,
   *    wall_ms, ts) per FIXTURES.md §4.
@@ -132,31 +138,47 @@ object Lineage {
       .drop("bucket").as[Doc]
   }
 
-  /** Extract with lineage columns captured inside the task (partition id
-    * and per-doc wall time measured where the work happens).
+  /** The input columns the extraction reads. `ExtractSpansTimedExpr`
+    * reads the span struct by position, while a typed `Dataset[Doc]`
+    * resolves it by name, so `to` reorders the fields of a table written
+    * with another field order instead of letting them be misread.
+    */
+  private val ExtractInput = StructType(Seq(
+    StructField("doc_id", StringType),
+    StructField("spans", ArrayType(StructType(Seq(
+      StructField("kind", StringType), StructField("text", StringType),
+      StructField("media_ref", StringType), StructField("offset", IntegerType)))))))
+
+  /** Extract with lineage columns captured inside the task: one Catalyst
+    * projection over the salted repartition, with no Doc/Span object
+    * round-trip. `partition_id` is `spark_partition_id()` of the
+    * extraction task; `wall_ms` is that task's time in
+    * `ExtractSpansExpr.evalStatic` for the doc (ExtractSpansTimedExpr).
     */
   def extractWithLineage(
       spark: SparkSession,
       docs: Dataset[Doc],
       strategy: Extract.Strategy,
       numPartitions: Int): Dataset[LineageDoc] = {
-    implicit val docEnc = org.apache.spark.sql.Encoders.product[Doc]
     implicit val outEnc = org.apache.spark.sql.Encoders.product[LineageDoc]
     val parts =
       if (numPartitions > 0) numPartitions
       else math.max(1, spark.sparkContext.defaultParallelism * 4)
-    docs
+    val (split, midpoint) = strategy match {
+      case Extract.Strategy.RegionClustering => (false, false)
+      case Extract.Strategy.SplitHeuristic   => (true, false)
+      case Extract.Strategy.SplitMidpoint    => (true, true)
+    }
+    val extracted = PlanBridge.column(
+      ExtractSpansTimedExpr(PlanBridge.expression(col("spans")), split, midpoint))
+    docs.toDF().to(ExtractInput)
       .repartition(parts, pmod(xxhash64(col("doc_id"), lit(16)), lit(parts)))
-      .as[Doc]
-      .mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
-        it.map { doc =>
-          val t0 = System.nanoTime()
-          val e: ExtractedDoc = Extract.extractDoc(doc, strategy)
-          val wallMs = (System.nanoTime() - t0) / 1000000L
-          LineageDoc(e.doc_id, e.spans, e.n_tables, e.n_cells, e.status, pid, wallMs)
-        }
-      }
+      .select(col("doc_id"), extracted.as("ex"), spark_partition_id().as("partition_id"))
+      .select(col("doc_id"), col("ex.spans").as("spans"),
+        col("ex.n_tables").as("n_tables"), col("ex.n_cells").as("n_cells"),
+        col("ex.status").as("status"), col("partition_id"),
+        col("ex.wall_ms").as("wall_ms"))
+      .as[LineageDoc]
   }
 
   /** One resumable run. Returns (#processed this run, #skipped as done).

@@ -43,12 +43,13 @@ object KCore {
         .agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("node"))
-      // dst-semi first, src-semi LAST: the final join's output is
-      // already clustered by src (shuffled semi-joins repartition on
-      // their key; a broadcast semi preserves the incoming src
-      // clustering), so the next round's degree groupBy needs no
-      // further exchange — the explicit repartition-back-to-src this
-      // ordering replaces was one full edge-frame shuffle per round
+      // dst-semi first, src-semi LAST: a shuffled src-semi repartitions
+      // on src, so the next round's degree groupBy needs no further
+      // exchange — the explicit repartition-back-to-src this ordering
+      // replaces was one full edge-frame shuffle per round. A broadcast
+      // semi-join keeps its input's clustering instead: a broadcast
+      // src-semi after a shuffled dst-semi leaves the frame clustered
+      // by dst, and the next groupBy shuffles again
       val (next, nextIds) = graft.dedup.Dedup.checkpointOwned(
         e.join(surviving.withColumnRenamed("node", "dst"), Seq("dst"), "leftsemi")
           .join(surviving.withColumnRenamed("node", "src"), Seq("src"), "leftsemi")

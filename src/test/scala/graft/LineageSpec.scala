@@ -1,6 +1,8 @@
 package graft
 
+import graft.extract.Extract
 import graft.fixtures.SpanGen
+import graft.functions.ExtractSpansTimedExpr
 import graft.lineage.Lineage
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -102,6 +104,100 @@ class LineageSpec extends AnyFunSuite {
     assert(committed.count() == 20)
     assert(committed.select("doc_id").distinct().count() == 20)
     assert(committed.filter($"run_id" =!= "retry").count() == 0)
+  }
+
+  test("extraction is one codegen'd projection: no object round-trip, expression evaluated once") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val ds = spark.createDataset(SpanGen.genDocs(8, seed = 4L).map(_._1))
+    for (strategy <- Seq(Extract.Strategy.RegionClustering,
+        Extract.Strategy.SplitHeuristic, Extract.Strategy.SplitMidpoint)) {
+      val out = Lineage.extractWithLineage(spark, ds, strategy, 4)
+      assert(out.collect().length == 8) // AQE settles the final plan
+      val plan = out.queryExecution.executedPlan
+      val text = plan.toString
+      for (op <- Seq("DeserializeToObject", "MapPartitions", "SerializeFromObject"))
+        assert(!text.contains(op), s"$strategy: $op in\n$text")
+      val helper = new AdaptiveSparkPlanHelper {}
+      def timed(p: org.apache.spark.sql.execution.SparkPlan) =
+        p.expressions.flatMap(_.collect { case e: ExtractSpansTimedExpr => e })
+      val evals = helper.flatMap(plan)(timed)
+      assert(evals.length == 1, s"$strategy: extraction evaluated ${evals.length}x in\n$text")
+      assert(evals.head.useSplitHeuristic == (strategy != Extract.Strategy.RegionClustering))
+      assert(evals.head.useMidpoint == (strategy == Extract.Strategy.SplitMidpoint))
+      val codegen = helper.collect(plan) { case w: WholeStageCodegenExec => w }
+      assert(codegen.exists(_.child.exists(timed(_).nonEmpty)),
+        s"$strategy: extraction outside whole-stage codegen in\n$text")
+    }
+  }
+
+  test("lineage columns: partition_id in range, wall_ms set, checksum of the extractDoc spans") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, sha2, to_json}
+    val docs = SpanGen.genDocs(50, seed = 13L).map(_._1)
+    val out = tmp() + "/out"
+    val metrics = tmp() + "/metrics"
+    val parts = 6
+    val (p, _) = Lineage.runResumable(spark, spark.createDataset(docs), out, metrics,
+      "run-1", numPartitions = parts)
+    assert(p == 50)
+    val lineage = Lineage.readOutput(spark, out)
+      .select(col("partition_id"), col("wall_ms")).collect()
+    assert(lineage.length == 50)
+    for (r <- lineage) {
+      assert(!r.isNullAt(0) && r.getInt(0) >= 0 && r.getInt(0) < parts, r)
+      assert(!r.isNullAt(1) && r.getLong(1) >= 0L, r)
+    }
+    val want = spark.createDataset(docs.map(Extract.extractDoc(_)))
+      .select(col("doc_id"), sha2(to_json(col("spans")), 256).as("checksum"))
+      .as[(String, String)].collect().toMap
+    val got = spark.read.parquet(metrics)
+      .select("doc_id", "checksum").as[(String, String)].collect().toMap
+    assert(got == want)
+  }
+
+  test("a doc with null spans commits a not-ok status with empty spans; the run goes on") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val good = SpanGen.genDocs(6, seed = 17L)
+    val nullDoc = Doc("null-spans", null)
+    val out = tmp() + "/out"
+    val metrics = tmp() + "/metrics"
+    val (p, _) = Lineage.runResumable(spark,
+      spark.createDataset(good.map(_._1) :+ nullDoc), out, metrics, "run-1")
+    assert(p == 7)
+    val rows = Lineage.readCommitted(spark, out, metrics)
+      .select("doc_id", "spans", "n_tables", "n_cells", "status")
+      .as[(String, Seq[Span], Int, Int, String)].collect().map(r => r._1 -> r).toMap
+    assert(rows("null-spans") == (("null-spans", Nil, 0, 0, Extract.NullSpansStatus)))
+    for ((doc, golden) <- good) {
+      assert(rows(doc.doc_id)._5 == "ok", doc.doc_id)
+      assert(rows(doc.doc_id)._2 == golden, doc.doc_id)
+    }
+    val status = spark.read.parquet(metrics).filter(col("doc_id") === "null-spans")
+      .select("status").as[String].collect().toSeq
+    assert(status == Seq(Extract.NullSpansStatus))
+    // the typed path agrees instead of failing on the null
+    val typed = Extract.extractDoc(nullDoc)
+    assert((typed.spans, typed.status) == ((Nil, Extract.NullSpansStatus)))
+  }
+
+  test("a span struct stored in another field order is read by name") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, struct, transform}
+    val fixtures = SpanGen.genDocs(12, seed = 19L)
+    val permuted = spark.createDataset(fixtures.map(_._1)).toDF()
+      .select(col("doc_id"), transform(col("spans"), s =>
+        struct(s("offset"), s("media_ref"), s("text"), s("kind"))).as("spans"))
+      .as[Doc]
+    val rows = Lineage.extractWithLineage(spark, permuted,
+        Extract.Strategy.RegionClustering, 4)
+      .collect().map(r => r.doc_id -> r).toMap
+    for ((doc, golden) <- fixtures) {
+      assert(rows(doc.doc_id).status == "ok", doc.doc_id)
+      assert(rows(doc.doc_id).spans == golden, doc.doc_id)
+    }
   }
 
   test("bucketed resume prunes completed buckets before the per-doc anti-join") {

@@ -66,6 +66,31 @@ class RunSpec extends AnyFunSuite {
     assert(Lineage.readCommitted(spark, out, metrics).count() == 40)
   }
 
+  test("e2 and e2mid through the Run entry point equal Extract.extractDoc doc for doc") {
+    import spark.implicits._
+    val docs = SpanGen.genDocs(40, seed = 83L).map(_._1)
+    val base = tmp()
+    val input = s"$base/input"
+    spark.createDataset(docs).write.parquet(input)
+    for (name <- Seq("e2", "e2mid")) {
+      val strategy = Run.parseStrategy(name)
+      val out = s"$base/out_$name"
+      val metrics = s"$base/metrics_$name"
+      val (p, s) = Run.run(spark, Array(input, out, metrics, s"run-$name", name))
+      assert(p == 40 && s == 0)
+      val rows = Lineage.readCommitted(spark, out, metrics)
+        .select("doc_id", "spans", "n_tables", "n_cells", "status")
+        .as[(String, Seq[Span], Int, Int, String)]
+        .collect().map(r => r._1 -> r).toMap
+      assert(rows.size == 40)
+      for (doc <- docs) {
+        val e = graft.extract.Extract.extractDoc(doc, strategy)
+        assert(rows(doc.doc_id) == ((e.doc_id, e.spans, e.n_tables, e.n_cells, e.status)),
+          s"$name ${doc.doc_id}")
+      }
+    }
+  }
+
   test("strategy parsing and bad usage fail fast") {
     assert(Run.parseStrategy("e2mid") == graft.extract.Extract.Strategy.SplitMidpoint)
     intercept[IllegalArgumentException] { Run.parseStrategy("bogus") }
